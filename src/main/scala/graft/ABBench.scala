@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Order-controlled micro-benchmark for drift attribution — the
   * PLANS.md protocol (quiet host, both run orders, >= 3 repeats) as a
@@ -23,18 +22,7 @@ object ABBench {
       (args(0), args(1).toInt, args(2).split(",").toSeq)
     val bad = names.filterNot(SparkEntry.queries.contains)
     require(bad.isEmpty, s"unknown queries: ${bad.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k"))  // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("32")
     def load1: Double =
       try java.nio.file.Files.readString(
           java.nio.file.Paths.get("/proc/loadavg"))
@@ -45,8 +33,7 @@ object ABBench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.sweep(spark)
       dt
     }
     for ((order, tag) <- Seq((names, "given"), (names.reverse, "reversed"))) {

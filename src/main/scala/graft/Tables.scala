@@ -194,15 +194,4 @@ object Tables {
     * on only for tables that actually evolved. */
   def parquetMerged(s: SparkSession, path: String): DataFrame =
     s.read.option("mergeSchema", "true").parquet(path)
-
-  /** Session config every graft session needs (local test harness). */
-  def sessionConfigs: Map[String, String] = Map(
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone"           -> "UTC",
-    // The synthetic tables' naive parquet timestamps are UTC instants;
-    // the DuckDB oracle reads them the same way. Without this, Spark 4
-    // infers TIMESTAMP_NTZ (isAdjustedToUTC=false footers) and every
-    // unix_micros/epoch expression fails to resolve.
-    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
-    "spark.sql.adaptive.enabled"           -> "true")
 }

@@ -1,12 +1,12 @@
 package org.apache.spark
 
-/** Audit-tool accessor for the private[spark] listener bus, used ONLY
-  * by the `graft.ShuffleAudit` diagnostic main (never by any query or
-  * operator): task-metric events are delivered asynchronously, so a
+/** Accessor for the private[spark] listener bus, used only by the
+  * `graft.Profile` diagnostic main and by specs (never by any query or
+  * operator): listener events are delivered asynchronously, so a
   * per-query byte attribution must drain the bus between queries or a
   * slow delivery bleeds one query's shuffle bytes into the next row of
-  * the report. The test-side twin (GraftBusHook) does the same for the
-  * plan-audit specs. */
+  * the report, and a spec that counts execution events must drain it
+  * before reading its counters. */
 object GraftMetricsHook {
   def drainListenerBus(sc: SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)

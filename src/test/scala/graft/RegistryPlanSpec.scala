@@ -9,8 +9,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cannot survive 100 TB. Broadcast nested-loop joins are allowed
   * (they are the designed shape for bounded-side inequality joins:
   * prefix-sum/-max offsets, top-k query broadcasts, range targets);
-  * an unbounded-by-unbounded cartesian is not. This generalizes the
-  * per-batch PlanAudit reads into a standing regression trap: a future
+  * an unbounded-by-unbounded cartesian is not. This generalizes reading
+  * `graft.Profile`'s formatted plans into a standing regression trap: a future
   * edit that drops a join condition or un-broadcasts a bounded side
   * fails here, not in a 100× production run.
   *
@@ -63,7 +63,7 @@ class RegistryPlanSpec extends SparkSpec {
       // the bus's own quiescence primitive. The execution-listener
       // bus drains off the same LiveListenerBus queues, so an empty
       // bus means every posted execution event has been delivered.
-      org.apache.spark.GraftBusHook.waitUntilListenerBusEmpty(
+      org.apache.spark.GraftMetricsHook.drainListenerBus(
         spark.sparkContext, 60000L)
       assert(nCkpt.get() > 0,
         "checkpoint audit saw zero checkpoint executions — the " +
@@ -76,7 +76,7 @@ class RegistryPlanSpec extends SparkSpec {
 
   test("flagship registered queries keep their pinned shuffle-exchange " +
       "counts") {
-    // End-to-end twin of the ShuffleAudit artifact's `exchanges`
+    // End-to-end twin of the shuffle_audit.json `exchanges`
     // column, pinned in CI for a representative spread of families so
     // a refactor that quietly adds an Exchange to a flagship query
     // fails HERE, not in a post-hoc artifact diff. The count is a
